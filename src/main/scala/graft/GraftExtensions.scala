@@ -7,8 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BoundedCollectList, CosinePrefixes, CosineSimilarity, GramMatrixAgg, HashedShingles, JlSignProject, MinHashShingles, MisraGries, NearestCell, NfcNormalize, OrderedPairs, ShingleSeq, SimHash48}
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * Catalyst expressions so they resolve by name in SQL and
-  * `call_function`. Enable with
+  * Catalyst expressions so they resolve by name in SQL text and
+  * `call_function`, plus the `asof_native`/`snapshot_at`/`changes_since`
+  * table functions, the as-of planner strategy and the two optimizer
+  * rules. The DataFrame operators build the native expressions directly
+  * and need none of it. Enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -705,14 +705,14 @@ private[graft] object QScanJoin {
       // TPC-H Q21 shape re-expressed Spark-first: in multi-supplier
       // orders, the supplier who UNIQUELY shipped last "blocked" the
       // order — EXISTS(another supplier) AND NOT EXISTS(another supplier
-      // also at the max) as two per-order aggregates joined back, never
-      // correlated subqueries; top-20 blockers via TakeOrderedAndProject
-      // collapse to the (order, supplier) grain FIRST: per-supplier max
+      // also at the max) as per-order facts from ONE Window pass, never
+      // correlated subqueries; top-20 blockers via TakeOrderedAndProject.
+      // Collapse to the (order, supplier) grain FIRST: per-supplier max
       // shipdate per order — then every later step is a plain count, no
       // countDistinct Expand anywhere and the raw lineitems shuffle once.
       // r18 (guide §2.4): the per-order max/nsupp/unique-at-max facts are
-      // all full-partition aggregates over the SAME key, so one Window
-      // pass over `os` replaces the aggregate + join-back + second
+      // all full-partition aggregates over the SAME key, so the Window
+      // over `os` replaces the old aggregate + join-back + second
       // aggregate + semi-join shape — which re-derived the (order,
       // supplier) grain subtree twice (no cross-branch CSE) and paid two
       // extra exchanges; identical survivors by construction

@@ -306,8 +306,8 @@ private[graft] object QTextCuration {
           (composed === decomposed).as("eq_raw"),
           length(composed).cast("long").as("len_composed"),
           length(decomposed).cast("long").as("len_decomposed"),
-          call_function("nfc_normalize", decomposed).as("nfc_text"),
-          (call_function("nfc_normalize", decomposed) === composed).as("eq_nfc"))
+          LlmOps.nfcNormalize(decomposed).as("nfc_text"),
+          (LlmOps.nfcNormalize(decomposed) === composed).as("eq_nfc"))
         .orderBy("p_partkey")
     }),
 

@@ -126,7 +126,7 @@ object StreamingOps {
                       assigned: DataFrame, centroids: DataFrame,
                       idCol: String, embCol: String,
                       k: Int, nProbe: Int): DataFrame = {
-    import graft.functions.VectorOps.cosineBest
+    import graft.functions.VectorOps.cosine
     val spark = assigned.sparkSession
     val cents: Seq[Seq[Float]] = centroids.orderBy("__cell").collect()
       .map(_.getSeq[Float](1).toIndexedSeq).toIndexedSeq
@@ -139,7 +139,7 @@ object StreamingOps {
     // negation, so idCol may be any orderable type (a negated id was an
     // analysis error for string ids and overflowed at Long.MinValue —
     // ADVICE r14). NULLS ORDER LAST on both fields explicitly: a null
-    // score (cosineBest over a null embedding) made every score branch
+    // score (cosine over a null embedding) made every score branch
     // evaluate null→false and fall through to the id, which is
     // intransitive against scored elements and leaves array_sort
     // undefined (ADVICE r15) — the explicit isNull branches restore a
@@ -156,7 +156,7 @@ object StreamingOps {
     // batch probe order
     val cellScores = transform(sequence(lit(0), lit(nCells - 1)), j =>
       struct(
-        cosineBest(spark, element_at(cLit, j + 1), col(qVecCol)).as("s"),
+        cosine(element_at(cLit, j + 1), col(qVecCol)).as("s"),
         j.as("id")))
     val probes = slice(array_sort(cellScores, bestFirst), 1,
       math.min(nProbe, nCells))
@@ -171,7 +171,7 @@ object StreamingOps {
           col(embCol).as("__nv")),
         Seq("__cell"))
       .select(col(tsCol), col("__qid"), col("__nid"),
-        cosineBest(spark, col("__nv"), col("__qv")).as("__score"))
+        cosine(col("__nv"), col("__qv")).as("__score"))
     cand
       .groupBy(window(col(tsCol), width), col("__qid"))
       .agg(slice(array_sort(collect_list(
@@ -1112,7 +1112,7 @@ object StreamingOps {
   def heavyHittersStream(docs: DataFrame, textCol: String, k: Int = 32): DataFrame = {
     val sk = docs
       .select(explode(graft.ops.LlmOps.tokens(col(textCol))).as("term"))
-      .agg(expr(s"misra_gries(term, $k)").as("__sk"), count(lit(1)).as("__n"))
+      .agg(graft.ops.LlmOps.misraGries(col("term"), k).as("__sk"), count(lit(1)).as("__n"))
     sk.select(col("__n"), explode(col("__sk")).as(Seq("term", "est")))
       .filter(col("est") * (k + 1) > col("__n"))
       .select(col("term"), col("est"), col("__n").as("n_total"))
@@ -1136,7 +1136,7 @@ object StreamingOps {
       .select(col(groupCol).as("__g"),
         explode(graft.ops.LlmOps.tokens(col(textCol))).as("term"))
       .groupBy(col("__g"))
-      .agg(expr(s"misra_gries(term, $k)").as("__sk"), count(lit(1)).as("__n"))
+      .agg(graft.ops.LlmOps.misraGries(col("term"), k).as("__sk"), count(lit(1)).as("__n"))
     sk.select(col("__g"), col("__n"), explode(col("__sk")).as(Seq("term", "est")))
       .filter(col("est") * (k + 1) > col("__n"))
       .select(col("__g").as(groupCol), col("term"), col("est"),
@@ -1159,7 +1159,7 @@ object StreamingOps {
     implicit val bcEnc: org.apache.spark.sql.Encoder[BandCollision] =
       org.apache.spark.sql.Encoders.product[BandCollision]
     val sig = docs.select(col(idCol).as("docId"),
-      graft.ops.LlmOps.minhashPlanBest(docs, col(textCol), shingleN, numHashes)
+      graft.ops.LlmOps.minhashPlan(col(textCol), shingleN, numHashes)
         .getField("sig").as("__sig"))
     graft.ops.LlmOps.lshBands(sig, "docId", "__sig", bands, rowsPerBand)
       .select(col("docId"), col("band").cast("int").as("band"),

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal package-scoped bridge: `Dataset.ofRows` (the only public-in-
@@ -30,4 +31,12 @@ object GraftSqlShim {
                               isStreaming: Boolean): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming)
+
+  /** Catalyst expression ⇄ Column (`classic.ExpressionUtils`, `private[sql]`):
+    * the DataFrame operators build graft's native expressions directly
+    * through these, so they never depend on the session's function
+    * registry (`spark.sql.extensions` serves only SQL text).
+    */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }

@@ -66,6 +66,25 @@ class BoundedCollectListSpec extends SparkTestBase {
     assert(misaligned == 0)
   }
 
+  test("any element type: strings and structs collect and saturate like longs") {
+    val df = spark.range(0, 1000)
+      .select((col("id") % 4).as("g"), concat(lit("d"), col("id")).as("s"),
+        struct(col("id").as("i"), col("id").cast("string").as("t")).as("st"))
+    val got = df.groupBy("g")
+      .agg(sort_array(call_function("bounded_collect_list", col("s"), lit(300))).as("ss"),
+        sort_array(call_function("bounded_collect_list", col("st"), lit(300))).as("sts"))
+    val want = df.groupBy("g")
+      .agg(sort_array(collect_list(col("s"))).as("ss"),
+        sort_array(collect_list(col("st"))).as("sts"))
+    assert(got.join(want, "g")
+      .filter(got("ss") =!= want("ss") || got("sts") =!= want("sts")).isEmpty)
+    val sizes = df.repartition(8).groupBy("g")
+      .agg(size(call_function("bounded_collect_list", col("s"), lit(20))).as("n"),
+        size(call_function("bounded_collect_list", col("st"), lit(20))).as("m"))
+      .as[(Long, Int, Int)].collect()
+    assert(sizes.length == 4 && sizes.forall(r => r._2 == 21 && r._3 == 21))
+  }
+
   test("out-of-range cap fails at analysis time") {
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT bounded_collect_list(x, 0) FROM VALUES (1L) AS t(x)")

@@ -41,7 +41,7 @@ object BoundedCollectProperties extends Properties("BoundedCollect") {
       // serialize round-trip in the merge path, as shuffle does
       agg.merge(a, agg.deserialize(agg.serialize(b)))
     }
-    merged.toSeq
+    merged.toSeq.map(_.asInstanceOf[Long])
   }
 
   private val genCase = for {

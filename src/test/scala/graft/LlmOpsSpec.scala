@@ -144,9 +144,9 @@ class LlmOpsSpec extends SparkTestBase {
   }
 
   test("near-dup pairs accept non-bigint id columns (native census gates on type)") {
-    // the native bounded_collect_list aggregate is bigint-only; a string
-    // id must transparently ride the collect_list fallback with the same
-    // pair results, not fail analysis when GraftExtensions is installed
+    // the native bounded_collect_list aggregate collects any element type:
+    // a string id gets the same saturating census and the same pair
+    // results as a bigint one
     val sdocs = docs.select(concat(lit("d"), $"doc_id").as("doc_id"), $"text")
     val pairs = LlmOps.nearDupPairs(sdocs, "doc_id", "text",
         numHashes = 16, bands = 16, threshold = 0.5)
@@ -467,6 +467,29 @@ class LlmOpsSpec extends SparkTestBase {
     val sk = LlmOps.simhash(df, "doc_id", "text").as[(Long, Long)].collect().toMap
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(hamming(sk(1L), sk(2L)) <= 10)
+  }
+
+  test("simhash pairs: a null-id doc never pairs and never shifts ids against sketches") {
+    // the null-id doc shares its text (hence every band bucket) with docs
+    // 1 and 2: a collect that skipped the null id but kept its sketch
+    // would misalign the zipped (id, sketch) lists and emit null ids
+    val text = "the quick brown fox jumps over the lazy dog"
+    val df = Seq(
+      (None: Option[Long], text),
+      (Some(1L), text),
+      (Some(2L), text),
+      (Some(3L), "the quick brown fox jumps over the lazy cat"),
+      (Some(4L), "completely different words entirely unrelated text here okay"))
+      .toDF("doc_id", "text")
+    val got = LlmOps.simhashPairs(df, "doc_id", "text", bands = 12, maxHamming = 10)
+      .as[(Option[Long], Option[Long], Long)].collect()
+    assert(got.exists { case (a, b, _) => a.contains(1L) && b.contains(2L) })
+    assert(got.forall { case (a, b, _) => a.isDefined && b.isDefined }, got.mkString(", "))
+    val sk = LlmOps.simhash(df, "doc_id", "text")
+      .as[(Option[Long], Long)].collect().collect { case (Some(id), h) => id -> h }.toMap
+    got.foreach { case (a, b, hamming) =>
+      assert(hamming == java.lang.Long.bitCount(sk(a.get) ^ sk(b.get)), s"($a, $b)")
+    }
   }
 
   test("simhash pairs rejects maxHamming >= bands (banding no longer lossless)") {

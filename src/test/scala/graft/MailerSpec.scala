@@ -115,7 +115,9 @@ class MailerSpec extends AnyFunSuite {
       s.close()
     })
     accept.start()
-    try test(server.getLocalPort, () => (commands, data))
+    // the server records QUIT after replying 221, so a reader must wait
+    // for its thread: the client may return before the last assignment
+    try test(server.getLocalPort, () => { accept.join(10000); (commands, data) })
     finally { accept.join(10000); server.close() }
   }
 

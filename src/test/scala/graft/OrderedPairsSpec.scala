@@ -11,12 +11,6 @@ import graft.ops.LlmOps
 class OrderedPairsSpec extends SparkTestBase {
   import spark.implicits._
 
-  /** The exact pre-r17 nested-HOF formulation. */
-  private def hofPairs(arr: org.apache.spark.sql.Column) =
-    flatten(transform(arr, a =>
-      filter(transform(arr, b => struct(a.as("a"), b.as("b"))),
-        p => p.getField("a") < p.getField("b"))))
-
   test("ordered_pairs resolves via SQL (SparkSessionExtensions registration)") {
     assert(spark.catalog.functionExists("ordered_pairs"))
     val r = spark.sql("SELECT ordered_pairs(array('b', 'a', 'c'))")
@@ -31,8 +25,8 @@ class OrderedPairsSpec extends SparkTestBase {
         Seq.fill(rng.nextInt(40))(rng.alphanumeric.take(1 + rng.nextInt(6)).mkString)))
       .toDF("id", "ts")
     val mismatches = df.select($"id",
-        LlmOps.orderedPairsBest(df, $"ts").as("one"),
-        hofPairs($"ts").as("hof"))
+        LlmOps.orderedPairs($"ts").as("one"),
+        HofTwins.orderedPairs($"ts").as("hof"))
       .filter(not($"one" <=> $"hof")) // null-safe: any order/element diff fails
       .count()
     assert(mismatches == 0)
@@ -41,7 +35,7 @@ class OrderedPairsSpec extends SparkTestBase {
   test("duplicate values pair count(x)*count(y) times, exactly like the HOF") {
     val df = Seq((1L, Seq("a", "b", "a", "b", "c"))).toDF("id", "ts")
     val (one, hof) = df.select(
-        LlmOps.orderedPairsBest(df, $"ts").as("one"), hofPairs($"ts").as("hof"))
+        LlmOps.orderedPairs($"ts").as("one"), HofTwins.orderedPairs($"ts").as("hof"))
       .as[(Seq[(String, String)], Seq[(String, String)])].head()
     assert(one == hof)
     assert(one.count(_ == ("a", "b")) == 4) // 2 a-positions x 2 b-positions
@@ -53,7 +47,7 @@ class OrderedPairsSpec extends SparkTestBase {
       (2L, None: Option[Seq[Option[String]]]))
       .toDF("id", "ts")
     val rows = df.select($"id",
-        LlmOps.orderedPairsBest(df, $"ts").as("one"), hofPairs($"ts").as("hof"))
+        LlmOps.orderedPairs($"ts").as("one"), HofTwins.orderedPairs($"ts").as("hof"))
       .as[(Long, Option[Seq[(String, String)]], Option[Seq[(String, String)]])]
       .collect().sortBy(_._1)
     assert(rows(0)._2 == rows(0)._3 && rows(0)._2.get == Seq(("a", "c")))
@@ -68,8 +62,8 @@ class OrderedPairsSpec extends SparkTestBase {
           .map(_.toLong)))
       .toDF("id", "ts")
     val mismatches = df.select($"id",
-        graft.ops.Assoc.pairStructsBest(df, $"ts").as("one"),
-        graft.ops.Assoc.pairStructs($"ts").as("hof"))
+        LlmOps.orderedPairs($"ts").as("one"),
+        HofTwins.pairStructs($"ts").as("hof"))
       .filter(not($"one" <=> $"hof"))
       .count()
     assert(mismatches == 0)
@@ -78,7 +72,7 @@ class OrderedPairsSpec extends SparkTestBase {
   test("works on non-string orderable elements (long), parity with HOF") {
     val df = Seq((1L, Seq(3L, 1L, 2L))).toDF("id", "ts")
     val (one, hof) = df.select(
-        LlmOps.orderedPairsBest(df, $"ts").as("one"), hofPairs($"ts").as("hof"))
+        LlmOps.orderedPairs($"ts").as("one"), HofTwins.orderedPairs($"ts").as("hof"))
       .as[(Seq[(Long, Long)], Seq[(Long, Long)])].head()
     assert(one == hof && one == Seq((1L, 3L), (1L, 2L), (2L, 3L)))
   }

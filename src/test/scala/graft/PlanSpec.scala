@@ -583,11 +583,24 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("Window"), s"census must not window:\n$p")
   }
 
-  test("blocking_suppliers: per-order aggregates + semi join, top-k heap") {
+  test("blocking_suppliers: one per-order Window pass, no semi join, top-k heap") {
     val p = planOf("blocking_suppliers")
-    assert(p.contains("LeftSemi"), s"unique-last filter must be a semi join:\n$p")
+    val finalPlan = p.split("== Initial Plan ==").head
+    // the per-order facts are Windows over l_orderkey alone, all fed by ONE
+    // order-grain shuffle (no join-back re-deriving the grain)
+    val windows = finalPlan.split("\n").filter(_.contains("Window ["))
+    assert(windows.nonEmpty, p)
+    assert(windows.forall(_.matches(""".*\], \[l_orderkey#\d+L\]\s*$""")),
+      s"every Window must partition by l_orderkey alone:\n$p")
+    assert("""Exchange hashpartitioning\(l_orderkey#\d+L, \d+\)""".r
+      .findAllIn(finalPlan).size == 1, s"one order-grain shuffle:\n$p")
+    assert(!p.contains("LeftSemi"), s"no join-back semi join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(!p.contains("CartesianProduct"), p)
+    // (order, supplier) grain, order grain, supplier grain: three hash
+    // exchanges in all
+    val exchanges = finalPlan.split("Exchange hashpartitioning").length - 1
+    assert(exchanges <= 3, s"$exchanges hash exchanges:\n$p")
   }
 
   test("supplier_share: global total broadcasts — no per-row shuffle for the threshold") {
