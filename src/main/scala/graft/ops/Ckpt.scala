@@ -23,11 +23,16 @@ import org.apache.spark.sql.execution.LogicalRDD
 private[graft] object Ckpt {
 
   /** Free the storage blocks behind an (already materialized) eager
-    * `localCheckpoint` Dataset. No-op for plans that do not read a
-    * checkpointed RDD. Non-blocking: removal proceeds asynchronously.
+    * `localCheckpoint` Dataset. Only the checkpoint itself may be released:
+    * the analyzed plan's ROOT must be the checkpoint's `LogicalRDD`. A plan
+    * built on top of a checkpoint (a select, a join of two checkpoints)
+    * throws instead of unpersisting whichever checkpoint it reads, which
+    * may still be live and, with its lineage cut, could never be
+    * recomputed. Non-blocking: removal proceeds asynchronously.
     */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case other => throw new IllegalArgumentException(
+      s"Ckpt.release: plan root is ${other.nodeName}, not a checkpoint's LogicalRDD")
+  }
 }

@@ -2,9 +2,9 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 import graft.ops.{Ingest, Relational, Temporal}
 import graft.schemas.Schemas
@@ -25,14 +25,30 @@ import graft.sources.PagedApi.PagedApiClient
   *  - "today" is a parameter (`runDate`), never the wall clock
   *    (/root/reference/main.py:214,244), so runs are deterministic
   *
-  * Driver-edge rule (100 TB posture): the only collect()s are the per-key
-  * fetch loops (S4/S9 analogs) whose cardinality is bounded by the
-  * anti-join of *unprocessed* keys, and the key list itself — never data
-  * rows.
+  * Per-key stages (participants, settings, group members) fetch their
+  * keys' pages in sorted key order on the driver and commit them as
+  * `(key, record)` rows with ONE `partitionBy(key)` dynamic-overwrite
+  * write per batch, so the number of Spark writes does not grow with the
+  * number of keys. A batch holds at most [[ZoomPipeline.BatchBudget]]
+  * chars of JSON and never splits a key (see [[ZoomPipeline.batches]]):
+  * overwriting a key's partition from a second batch would delete the
+  * rows the first one wrote. A batch with no rows writes nothing. If a
+  * fetch fails, the keys fetched but not yet written are lost with the
+  * run; the anti-join picks them up again on the next run.
+  *
+  * Every read uses the table's declared schema ([[ZoomPipeline.tableSchemas]]):
+  * no footer-reading inference job, partition keys keep their declared
+  * type whatever their values look like (a uuid `"0012"` stays a string),
+  * and a table directory without data files reads as zero rows.
+  *
+  * Driver-edge rule (100 TB posture): the only collect()s are the key
+  * lists, whose cardinality is bounded by the anti-join of *unprocessed*
+  * keys, and the fetched JSON of one batch — never warehouse data rows.
   */
 class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
                    warehouse: String, sleep: Long => Unit = Thread.sleep) {
   import spark.implicits._
+  import ZoomPipeline._
 
   spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
@@ -46,19 +62,38 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  def table(table: String): DataFrame = spark.read.parquet(path(table))
+  def table(table: String): DataFrame =
+    spark.read.schema(tableSchemas(table)).parquet(path(table))
 
-  /** Raw JSON pages → typed rows via declared schema; union-of-pages
-    * tolerates per-page drift (SURVEY.md §1.3).
+  /** JSON records in a `value` column → typed rows via one `from_json`
+    * under a declared schema; absent fields null-fill, extras drop
+    * (SURVEY.md §1.3). `key`, a data column of `records`, follows the
+    * parsed fields and wins over a JSON field of the same name.
     */
-  private def pagesToDf(pages: Seq[PagedApi.ApiPage], schema: StructType): DataFrame = {
-    val dfs = pages.filter(_.records.nonEmpty).map { p =>
-      spark.createDataset(p.records)
-        .select(from_json(col("value"), schema).as("r"))
-        .select("r.*")
-    }
-    if (dfs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else Relational.unionPages(dfs)
+  private def parse(records: DataFrame, schema: StructType,
+                    key: Option[String] = None): DataFrame = {
+    val fields = StructType(schema.filterNot(f => key.contains(f.name)))
+    val keyCols = key.toSeq.map(col)
+    records.select(from_json(col("value"), fields).as("r") +: keyCols: _*)
+      .select(col("r.*") +: keyCols: _*)
+  }
+
+  private def pagesToDf(pages: Seq[PagedApi.ApiPage], schema: StructType): DataFrame =
+    parse(pages.flatMap(_.records).toDF("value"), schema)
+
+  /** Per-key stage commit: `fetch` each key's records in the given order
+    * and write each [[ZoomPipeline.batches]] batch as `(key, value)` rows
+    * shaped by `rows`, with one dynamic-overwrite `partitionBy(key)` write.
+    */
+  private def writeBatches[K: Encoder](table: String, key: String, keys: Seq[K])(
+      fetch: K => Seq[String])(rows: DataFrame => DataFrame): Unit = {
+    val enc = Encoders.tuple(implicitly[Encoder[K]], Encoders.STRING)
+    batches(keys.iterator.map(k => k -> fetch(k)), BatchBudget)
+      .filter(_.nonEmpty)
+      .foreach { batch =>
+        rows(spark.createDataset(batch)(enc).toDF(key, "value"))
+          .write.mode("overwrite").partitionBy(key).parquet(path(table))
+      }
   }
 
   /** Users snapshot (§3.1): paged fetch → fixed 13-column reindex → atomic
@@ -112,14 +147,12 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
           meetings, table("participants").select("meeting_uuid"),
           "uuid", "meeting_uuid")
       else meetings
-    // driver edge: bounded list of *unprocessed* keys only (S4 analog)
-    val uuids = newKeys.orderBy("uuid").as[String].collect()
-    uuids.foreach { uuid =>
-      val pages = PagedApi.fetchAllPages(client, "participants", Some(uuid), sleep = sleep)
-      val part = pagesToDf(pages, Schemas.participants)
-        .withColumn("meeting_uuid", lit(uuid)) // F5 literal injection
-      part.write.mode("overwrite").partitionBy("meeting_uuid").parquet(path("participants"))
-    }
+    // driver edge: bounded list of *unprocessed* keys only (S4 analog),
+    // sorted here, nulls first like Spark's ascending order
+    val uuids = newKeys.as[String].collect().sortBy(Option(_))
+    writeBatches("participants", "meeting_uuid", uuids.toSeq) { uuid =>
+      PagedApi.fetchAllPages(client, "participants", Some(uuid), sleep = sleep).flatMap(_.records)
+    }(parse(_, Schemas.participants, Some("meeting_uuid"))) // F5 key injection
     uuids.length
   }
 
@@ -136,19 +169,18 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
           meetings, table("meeting_settings").select("meeting_id"),
           "id", "meeting_id")
       else meetings
-    val ids = newKeys.orderBy("id").as[Long].collect()
-    ids.foreach { id =>
-      val page = PagedApi.fetchWithRetry(client, "settings", Some(id.toString), None, sleep = sleep)
-      val settings = spark.createDataset(page.records.toSeq)
-        .select(
-          lit(id).as("meeting_id"),
-          get_json_object(col("value"), "$.settings.enforce_login").try_cast("boolean").as("enforce_login"),
-          get_json_object(col("value"), "$.settings.enforce_login_domains").as("enforce_login_domains"),
-          get_json_object(col("value"), "$.settings.authentication_domains").as("authentication_domains"),
-          get_json_object(col("value"), "$.settings.authentication_name").as("authentication_name"),
-          get_json_object(col("value"), "$.settings.meeting_authentication").try_cast("boolean").as("meeting_authentication"),
-          get_json_object(col("value"), "$.settings.waiting_room").try_cast("boolean").as("waiting_room"))
-      settings.write.mode("overwrite").partitionBy("meeting_id").parquet(path("meeting_settings"))
+    val ids = newKeys.as[Long].collect().sorted
+    writeBatches("meeting_settings", "meeting_id", ids.toSeq) { id =>
+      PagedApi.fetchWithRetry(client, "settings", Some(id.toString), None, sleep = sleep).records
+    } { settings =>
+      settings.select(
+        col("meeting_id"),
+        get_json_object(col("value"), "$.settings.enforce_login").try_cast("boolean").as("enforce_login"),
+        get_json_object(col("value"), "$.settings.enforce_login_domains").as("enforce_login_domains"),
+        get_json_object(col("value"), "$.settings.authentication_domains").as("authentication_domains"),
+        get_json_object(col("value"), "$.settings.authentication_name").as("authentication_name"),
+        get_json_object(col("value"), "$.settings.meeting_authentication").try_cast("boolean").as("meeting_authentication"),
+        get_json_object(col("value"), "$.settings.waiting_room").try_cast("boolean").as("waiting_room"))
     }
     ids.length
   }
@@ -174,7 +206,7 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     if (!tableExists("groups")) return Seq.empty
     val g = table("groups")
     groupName.fold(g)(n => g.filter(col("name") === n))
-      .select("id").orderBy("id").as[String].collect().toSeq
+      .select("id").as[String].collect().sortBy(Option(_)).toSeq
   }
 
   /** A4 first-match pick — the reference's `_get_group_ids("Students")[0]`
@@ -184,17 +216,13 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     groupIds(Some(groupName)).headOption
 
   /** Group members (S4 per-key scan, main.py:149-170): page loop per group
-    * id, parent-key literal injection, one partition per group so a
-    * re-run overwrites instead of duplicating. Returns total member rows.
+    * id, parent-key injection, one partition per group so a re-run
+    * overwrites instead of duplicating. Returns total member rows.
     */
   def loadGroupMembers(): Long = {
-    val ids = groupIds()
-    ids.foreach { gid =>
-      val pages = PagedApi.fetchAllPages(client, "group_members", Some(gid), sleep = sleep)
-      val members = pagesToDf(pages, Schemas.groupMembers)
-        .withColumn("group_id", lit(gid)) // F5 literal injection (main.py:165)
-      members.write.mode("overwrite").partitionBy("group_id").parquet(path("group_members"))
-    }
+    writeBatches("group_members", "group_id", groupIds()) { gid =>
+      PagedApi.fetchAllPages(client, "group_members", Some(gid), sleep = sleep).flatMap(_.records)
+    }(parse(_, Schemas.groupMembers, Some("group_id"))) // F5 key injection (main.py:165)
     if (tableExists("group_members")) table("group_members").count() else 0L
   }
 
@@ -210,5 +238,54 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
       catch { case _: Exception => failed += 1 } // log-and-continue semantics
     }
     (ok, failed)
+  }
+}
+
+object ZoomPipeline {
+
+  /** JSON buffered on the driver per per-key write, counted in chars. */
+  private val BatchBudget: Long = 64L << 20
+
+  /** Groups consecutive keys' records into write batches of at most
+    * `budget` chars of JSON, in key order. A key's records are never split
+    * across batches; a key larger than `budget` gets a batch of its own.
+    * Lazy: a batch pulls keys (and so fetches them) only up to the first
+    * key that no longer fits, so at most one batch plus one key is held.
+    */
+  private[pipeline] def batches[K](keyed: Iterator[(K, Seq[String])],
+                                   budget: Long): Iterator[Seq[(K, String)]] = {
+    def chars(records: Seq[String]): Long = records.iterator.map(_.length.toLong).sum
+    val in = keyed.buffered
+    new Iterator[Seq[(K, String)]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Seq[(K, String)] = {
+        val batch = Vector.newBuilder[(K, String)]
+        var used = 0L
+        var first = true
+        while (in.hasNext && (first || used + chars(in.head._2) <= budget)) {
+          val (k, records) = in.next()
+          records.foreach(r => batch += (k -> r))
+          used += chars(records)
+          first = false
+        }
+        batch.result()
+      }
+    }
+  }
+
+  /** Each warehouse table's declared read schema: the entity's fields,
+    * then its partition key with a fixed type (inference would type a key
+    * from its values: a uuid `"0012"` as int 12, small ids as int).
+    */
+  private val tableSchemas: Map[String, StructType] = {
+    def keyedBy(schema: StructType, key: String, tpe: DataType) =
+      StructType(schema.filterNot(_.name == key) :+ StructField(key, tpe))
+    Map(
+      "users" -> Schemas.users,
+      "groups" -> Schemas.groups,
+      "meetings" -> keyedBy(Schemas.meetings, "run_date", DateType),
+      "participants" -> keyedBy(Schemas.participants, "meeting_uuid", StringType),
+      "meeting_settings" -> keyedBy(Schemas.meetingSettings, "meeting_id", LongType),
+      "group_members" -> keyedBy(Schemas.groupMembers, "group_id", StringType))
   }
 }

@@ -20,10 +20,20 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object ZoomRunner {
 
-  /** One run's outcome — the mailer's subject/body content as data. */
+  /** One run's outcome — the mailer's subject/body content as data.
+    * `stageMs` holds the elapsed milliseconds of each completed stage, in
+    * `stagesRun` order (the reference's per-function `@elapsed`, its
+    * `timer.py:16-28`); empty when the stages were not timed.
+    */
   case class JobReport(jobName: String, success: Boolean,
                        errorMessage: Option[String], elapsedMs: Long,
-                       stagesRun: Seq[String]) {
+                       stagesRun: Seq[String], stageMs: Seq[Long] = Nil) {
+    /** `name N ms` per stage; a stage without a time prints its name only. */
+    def stageSummary: String =
+      stagesRun.zipWithIndex.map { case (s, i) =>
+        stageMs.lift(i).fold(s)(ms => s"$s $ms ms")
+      }.mkString(", ")
+
     /** mailer.py:25-35 formatting. */
     def subjectLine: String =
       s"$jobName - ${if (success) "Success" else "Error"}"
@@ -39,7 +49,7 @@ object ZoomRunner {
   class LogNotifier extends Notifier {
     override def notify(r: JobReport): Unit =
       org.apache.log4j.Logger.getLogger(getClass)
-        .info(s"${r.subjectLine}: ${r.bodyText} (${r.elapsedMs} ms, stages=${r.stagesRun.mkString(",")})")
+        .info(s"${r.subjectLine}: ${r.bodyText} (${r.elapsedMs} ms, stages: ${r.stageSummary})")
   }
 
   case class JobFlags(users: Boolean = false, accounts: Boolean = false,
@@ -72,7 +82,13 @@ object ZoomRunner {
           create: Row => Unit = _ => ()): JobReport = {
     val t0 = System.nanoTime()
     val stages = Seq.newBuilder[String]
-    def stage(name: String)(body: => Unit): Unit = { body; stages += name }
+    val stageMs = Seq.newBuilder[Long]
+    def stage(name: String)(body: => Unit): Unit = {
+      val s0 = System.nanoTime()
+      body
+      stages += name
+      stageMs += (System.nanoTime() - s0) / 1000000
+    }
     val error: Option[String] =
       try {
         if (flags.users) {
@@ -98,7 +114,7 @@ object ZoomRunner {
         case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}")
       }
     val report = JobReport(jobName, error.isEmpty, error,
-      (System.nanoTime() - t0) / 1000000, stages.result())
+      (System.nanoTime() - t0) / 1000000, stages.result(), stageMs.result())
     notifier.notify(report)
     report
   }
